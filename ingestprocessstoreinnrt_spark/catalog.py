@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import derived
+
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLES = (
@@ -46,42 +48,36 @@ _TS_COLS = {
 }
 
 
-# Logical-plan memo: building a parquet DataFrame costs ~100 ms of file
-# listing + footer schema reads, and a 40-query session re-loads the same
-# immutable table dozens of times.  Keyed per Spark application so a new
-# session (the driver's fresh process) always re-lists; the memo'd object
-# is an immutable logical plan whose execution stays fully lazy.
-_LOAD_MEMO: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table as a lazy parquet DataFrame.  Building one costs ~100 ms
+    of file listing and footer reads, so the frame is held in the
+    derived-state registry until the table (or the session) changes."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Callers (the test driver included) may hand us a session built
     # without our defaults; both knobs are runtime-settable, so make
-    # every load self-sufficient.  Set on every call (not just memo
-    # misses): a sibling session sharing the JVM app shares the memo but
-    # not the SQL conf.
+    # every load self-sufficient.  Set on every call, not just on
+    # registry misses: a caller may reset the conf between calls.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, os.path.abspath(sf_dir), name)
-    got = _LOAD_MEMO.get(key)
-    if got is not None:
-        return got
-    # miss: evict entries from other applications — their DataFrames pin
-    # stopped SparkSessions and would otherwise accumulate forever in
-    # long-lived processes that restart sessions (the test suite does)
-    for k in [k for k in _LOAD_MEMO if k[0] != app_id]:
-        del _LOAD_MEMO[k]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return derived.get(
+        spark, "table", sf_dir, name, lambda: _read(spark, sf_dir, name)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    # a registry miss may follow an in-place rewrite, and Spark's cache
+    # manager matches cached plans by path: refresh any data it still
+    # holds for the old files (no-op when nothing over the path is cached)
+    spark.catalog.refreshByPath(path)
+    df = spark.read.parquet(path)
     for col in _TS_COLS.get(name, ()):
         dt = dict(df.dtypes).get(col)
         if dt == "bigint":  # nanos-as-long generation
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
         elif dt == "timestamp_ntz":  # NTZ slipped through (pre-set reader conf)
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _LOAD_MEMO[key] = df
     return df
 
 

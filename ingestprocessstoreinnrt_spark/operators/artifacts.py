@@ -1,5 +1,5 @@
 """Persisted per-corpus operator artifacts (pair frames, signature
-indexes) — the dedup-family twin of ml.py's centroid disk cache.
+indexes, fitted centroids and PQ codebooks).
 
 A verified near-dup pair frame or a banded-signature index is a FITTED
 INDEX: a pure function of the corpus contents that a production dedup

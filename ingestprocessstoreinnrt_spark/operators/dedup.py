@@ -34,6 +34,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..catalog import fan_out, load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
 from ..functions.text import fingerprint
@@ -655,15 +656,12 @@ def _minhash_array():
 # (judge-measured ~2.5x on the family).  Ownership rule, recorded in
 # PERFORMANCE.md: ONE memoized entrypoint owns the cache; every
 # consumer calls it; first caller pays, the rest ride — order-free.
-# Keyed by (applicationId, sf_dir) so a restarted session never sees a
-# DataFrame bound to a dead context; re-caches if a catalog
-# clearCache() evicted the entry (bench does this at family
+# Held in the derived-state registry, so a restarted session or a
+# rewritten corpus never sees a stale DataFrame; re-caches if a
+# catalog clearCache() evicted the entry (bench does this at family
 # boundaries).  Pin cost at sf0.1: ~185k (doc_a, doc_b, jaccard,
 # n_matches) rows, a few MB — noise next to the rebuild (or, since
 # r12, the artifact re-read) it prevents.
-_LSH_PAIRS_MEMO: dict = {}
-
-
 def lsh_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized, cached, verified MinHash+LSH near-dup pair frame
     (doc_a, doc_b, jaccard, n_matches) — the single cache owner for the
@@ -677,24 +675,20 @@ def lsh_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_artifact,
     )
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _LSH_PAIRS_MEMO if k[0] != app]:
-        del _LSH_PAIRS_MEMO[k]  # dead context (one SparkContext/process)
-    key = (app, sf_dir)
-    df = _LSH_PAIRS_MEMO.get(key)
-    if df is None:
+    def build() -> DataFrame:
         # plan parameters that change the CONTENTS are part of the
         # artifact name: a retuned band/threshold config must rebuild,
         # not read a stale index
         scratch: list = []
-        df = corpus_artifact(
+        return corpus_artifact(
             spark,
             sf_dir,
             f"lsh_pairs_k{_K}b{_B}r{_R}t{_T_NUM}_{_T_DEN}",
             lambda: _build_lsh_pairs(spark, sf_dir, scratch),
             cleanup=lambda: [s.unpersist() for s in scratch],
         )
-        _LSH_PAIRS_MEMO[key] = df
+
+    df = derived.get(spark, "lsh_pairs", sf_dir, None, build)
     if not df.is_cached:
         df.cache()
     return df
@@ -1002,20 +996,17 @@ def _adaptive_mask_sql(table: str = "embeddings") -> str:
     )
 
 
-# corpus-size plan parameters (adaptive signature width, SemDeDup
-# cluster count) memoized by the embeddings table's content
-# fingerprint — one parquet-metadata COUNT per table per session, same
-# validity rule as ml's centroid artifact cache
-_EMB_N_MEMO: dict = {}
-
-
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    from . import ml
-
-    key = ml._emb_fingerprint(sf_dir)
-    if key not in _EMB_N_MEMO:
-        _EMB_N_MEMO[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_N_MEMO[key]
+    """Embeddings row count for the corpus-size plan parameters
+    (adaptive signature width, SemDeDup cluster count): one
+    parquet-metadata COUNT per corpus per session."""
+    return derived.get(
+        spark,
+        "emb_n",
+        sf_dir,
+        None,
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -417,7 +417,7 @@ WHERE rank <= {TOP_K}"""
 # Every other ANN verb rebuilds its index per session; a 100 TB corpus
 # ingesting embeddings continuously needs the index MAINTAINED: fit the
 # coarse quantizer once on the base corpus (the persisted fitted
-# artifact — fit_centroids' cross-session cache), then each incoming
+# artifact — fit_centroids' corpus artifact), then each incoming
 # batch is coarse-assigned with that SAME quantizer (a per-row
 # broadcast fold, no refit) and upserted into the inverted index —
 # queries serve top-k against the maintained index without ever
@@ -935,8 +935,8 @@ def _pq_codebook_row(spark: SparkSession, sf_dir: str):
             "vec_id",
             F.slice("qv", m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("qv"),
         ).cache()
-        # memo_key = the data dir (activates the persistent codebook
-        # cache — PQ codebooks are fitted artifacts, built once per
+        # memo_key = the data dir (persists the codebook as a corpus
+        # artifact — PQ codebooks are fitted artifacts, built once per
         # table like the IVF coarse quantizer); tag isolates subspaces
         cents = ml.fit_centroids(
             spark, qm, PQ_K, PQ_ITERS, memo_key=sf_dir, tag=f"_pq{m}"
@@ -944,9 +944,9 @@ def _pq_codebook_row(spark: SparkSession, sf_dir: str):
         qm.unpersist()
         all_cents.append(cents)
     q.unpersist()
-    # memoized by contents (ml.memo_row_frame): repeat invocations
-    # must yield plan-identical codebook rows or no downstream cache
-    # ever dedups (ml._ROW_FRAME_MEMO rationale)
+    # memoized by contents: repeat invocations must yield
+    # plan-identical codebook rows or no downstream cache ever dedups
+    # (rationale at ml.memo_row_frame)
     cdf = ml.memo_row_frame(
         spark,
         [([(m, cid, cv) for m, cs in enumerate(all_cents)

@@ -1,4 +1,4 @@
-"""Session-scoped memo of declared-query DataFrame PLANS.
+"""Declared-query DataFrame PLANS, held in the derived-state registry.
 
 Profiling (r13, guide §1.1): rebuilding a declared query's DataFrame
 object costs 0.3-1.7 s of pure py4j round trips at sf0.1 (5,800 socket
@@ -19,12 +19,15 @@ Scope rules, so this can never shade into result caching:
 * The memo holds LAZY frames only; every action still executes the
   full plan (a family-cold ``clearCache()`` drops any .cache()d data
   and the next action recomputes from parquet).
-* bench.py and tools/isolated_probe.py clear() this memo at each
-  family boundary alongside the fit memos, so every family's cold rep
-  still pays one full plan construction per session.
+* A plan is keyed like every registry entry (derived.py):
+  a rewritten table or a new session rebuilds it, and
+  ``derived.clear()`` at each bench family boundary makes every
+  family's cold rep pay one full plan construction.
 """
 
 from __future__ import annotations
+
+from . import derived
 
 # Queries whose construction RUNS Spark jobs (fits, collects,
 # localCheckpoint iterations, artifact reads) — never memoized: their
@@ -35,7 +38,7 @@ from __future__ import annotations
 PLAN_IMPURE = frozenset(
     {
         # r14: construction opens the persisted basket pair artifact
-        # (a parquet read) when basket._PAIR_MEMO is cold — the same
+        # (a parquet read) when its registry entry is cold — the same
         # treatment as the dedup artifact openers below
         "bi_basket_lift",
         "graph_degree_stats",
@@ -64,33 +67,11 @@ PLAN_IMPURE = frozenset(
     }
 )
 
-_PLAN_MEMO: dict = {}
-
-
-def clear() -> None:
-    """Family-cold hook: forget every memoized plan (bench.py /
-    isolated_probe.py call this next to the fit-memo clears) so the
-    next invocation rebuilds and re-registers its .cache() marks."""
-    _PLAN_MEMO.clear()
-
-
 def _wrap(name: str, fn):
     def wrapped(spark, sf_dir):
-        from .operators.ml import _session_token
-
-        app, sess = _session_token(spark)
-        # evict on the FULL (app, sess) token (ADVICE r13): a stale
-        # sessionUUID of a still-live app (spark.newSession()) would
-        # otherwise accumulate dead DataFrame handles for the app's
-        # lifetime
-        for k in [k for k in _PLAN_MEMO if (k[0], k[1]) != (app, sess)]:
-            del _PLAN_MEMO[k]  # dead context's / dead session's frames
-        key = (app, sess, name, sf_dir)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
-        return df
+        return derived.get(
+            spark, "plan", sf_dir, name, lambda: fn(spark, sf_dir)
+        )
 
     wrapped.__name__ = f"memoized_{name}"
     wrapped.__wrapped__ = fn

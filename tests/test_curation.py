@@ -559,23 +559,31 @@ def test_dup_spans_exact_boundaries(spark, tmp_path):
 
 
 def test_run_bpe_memo_hits_and_stays_correct(spark):
-    """The fitted-tokenizer memo (r13): a second _run_bpe call for the
-    same (app, corpus) returns the memoized fit without re-running the
-    merge loop, and the memoized merges are the ones bpe_train
-    declares; a different corpus key misses independently."""
+    """The fitted tokenizer lives in the derived-state registry: a
+    second _run_bpe call for the same corpus returns the same fit
+    objects without re-running the merge loop, and the memoized merges
+    are the ones bpe_train declares; a different corpus misses
+    independently."""
+    from ingestprocessstoreinnrt_spark import derived
     from tests.conftest import SF_ORACLE, SF_SMOKE
 
-    curation._BPE_MEMO.clear()
+    derived.clear()
+    start = dict(derived.STATS.get("bpe", {"hit": 0, "miss": 0}))
+
+    def seen():
+        c = derived.STATS["bpe"]
+        return c["hit"] - start["hit"], c["miss"] - start["miss"]
+
     m1, v1 = curation._run_bpe(spark, SF_ORACLE)
-    assert len(curation._BPE_MEMO) == 1
+    assert seen() == (0, 1)
     m2, v2 = curation._run_bpe(spark, SF_ORACLE)
     assert m2 is m1 and v2 is v1  # memo hit, not a re-fit
+    assert seen() == (1, 1)
     got = [
         (r.merge_idx, r.lhs, r.rhs, r.merged, r.pair_count)
         for r in curation.bpe_train(spark, SF_ORACLE).collect()
     ]
     assert got == sorted(m1)  # the declared result IS the memoized fit
-    m3, _ = curation._run_bpe(spark, SF_SMOKE)
-    assert len(curation._BPE_MEMO) == 2  # distinct corpus, distinct key
-    assert m3 != m1 or m3 == m1  # smoke fit computed (no raise)
-    curation._BPE_MEMO.clear()
+    assert seen() == (2, 1)
+    curation._run_bpe(spark, SF_SMOKE)
+    assert seen() == (2, 2)  # distinct corpus, distinct miss

@@ -7,8 +7,8 @@
    recompute.
 2. The memo hands repeat invocations the SAME frame object, and a
    memoized frame still computes (lazy plan only — no result capture).
-3. clear() forgets plans, so a family-cold rebuild re-registers its
-   .cache() marks.
+3. derived.clear() forgets plans, so a family-cold rebuild
+   re-registers its .cache() marks.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from ingestprocessstoreinnrt_spark import planmemo  # noqa: E402
+from ingestprocessstoreinnrt_spark import derived, planmemo  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,7 +83,7 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     df1 = qs[name](spark, SF)
     n1 = df1.count()
     assert n1 == qs[name](spark, SF).count()
-    planmemo.clear()
+    derived.clear()
     df2 = qs[name](spark, SF)
     assert df2 is not df1, "clear() must force a rebuild"
     assert df2.count() == n1

@@ -5,7 +5,7 @@ In-sweep per-query timings inside cache-sharing families measure WHICH
 shared frames survived eviction in that sweep, not code (ROUND_NOTES
 r11 methodology lesson).  This tool isolates one query at a time:
 
-  * clear the SQL cache AND the dedup pair-frame memo (family-cold);
+  * clear the SQL cache AND the derived-state registry (family-cold);
   * optionally pre-run a family OWNER query first (--owner name), so
     the probed time is the query's own incremental cost over a warm
     family frame;
@@ -41,8 +41,8 @@ def main() -> None:
     sf_dir, names = args[0], args[1:]
 
     import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark import derived as _derived
     from ingestprocessstoreinnrt_spark.operators import artifacts as _art
-    from ingestprocessstoreinnrt_spark.operators import dedup as _dd
     from ingestprocessstoreinnrt_spark.session import get_spark
 
     # provenance stamps (VERDICT r12 item 6): a probe line must be
@@ -66,18 +66,9 @@ def main() -> None:
     # untimed warmup: JVM + codegen + parquet footers
     next(iter(qs.values()))(spark, sf_dir).count()
 
-    from ingestprocessstoreinnrt_spark.operators import curation as _cu
-
     def family_cold() -> None:
-        from ingestprocessstoreinnrt_spark import planmemo as _pm
-
-        from ingestprocessstoreinnrt_spark.operators import basket as _bk
-
         spark.catalog.clearCache()
-        _dd._LSH_PAIRS_MEMO.clear()
-        _cu._BPE_MEMO.clear()
-        _bk._PAIR_MEMO.clear()
-        _pm.clear()
+        _derived.clear()
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
@@ -89,6 +80,7 @@ def main() -> None:
     for name in names:
         family_cold()
         art0 = dict(_art.STATS)
+        der0 = {k: dict(v) for k, v in _derived.STATS.items()}
         rec = {"sf_dir": sf_dir, "query": name, "code_sha": sha,
                "load_1m": round(os.getloadavg()[0], 2)}
         if owner:
@@ -98,6 +90,10 @@ def main() -> None:
         rec["warm_sec"] = run(name)
         rec["artifacts"] = {
             k: _art.STATS[k] - art0[k] for k in ("hit", "miss")
+        }
+        rec["derived"] = {
+            kind: {k: n - der0.get(kind, {}).get(k, 0) for k, n in c.items()}
+            for kind, c in _derived.STATS.items()
         }
         print(json.dumps(rec), flush=True)
     spark.stop()
